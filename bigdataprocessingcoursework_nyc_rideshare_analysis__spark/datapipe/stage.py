@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import shingles_col
-from ..sources import load_table
+from ..sources.tables import file_listing, load_table, read_parquet
 
 #: bump to invalidate every staged frame after a change to staged schemas
 #: or to the tokenization/shingling expressions they bake in
@@ -64,14 +64,8 @@ def _source_key(sf_dir: str, table: str = "documents") -> str:
     so a regenerated source file maps to a fresh stage directory."""
     path = os.path.join(sf_dir, f"{table}.parquet")
     parts = [os.path.abspath(path), f"v{STAGE_VERSION}"]
-    if os.path.isdir(path):
-        for root, _dirs, files in sorted(os.walk(path)):
-            for fname in sorted(files):
-                st = os.stat(os.path.join(root, fname))
-                parts.append(f"{fname}:{st.st_size}:{st.st_mtime_ns}")
-    else:
-        st = os.stat(path)
-        parts.append(f"{st.st_size}:{st.st_mtime_ns}")
+    for fname, size, mtime in file_listing(path):
+        parts.append(f"{fname}:{size}:{mtime}" if fname else f"{size}:{mtime}")
     return hashlib.sha1("|".join(parts).encode()).hexdigest()[:16]
 
 
@@ -124,7 +118,7 @@ def staged_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         lambda: featurize_documents(load_table(spark, sf_dir, "documents").repartition(par)),
     )
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 def staged_shingles(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
@@ -139,7 +133,7 @@ def staged_shingles(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
         ).distinct()
 
     out = _ensure(f"doc_shingles_k{k}", sf_dir, build)
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 def staged_segments(spark: SparkSession, sf_dir: str, width: int | None = None) -> DataFrame:
@@ -164,7 +158,7 @@ def staged_segments(spark: SparkSession, sf_dir: str, width: int | None = None) 
 
     w = SEG_TOKENS if width is None else width
     out = _ensure(f"doc_segments_w{w}", sf_dir, build)
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 def staged_jaccard_pairs(spark: SparkSession, sf_dir: str, threshold: float | None = None) -> DataFrame:
@@ -185,7 +179,7 @@ def staged_jaccard_pairs(spark: SparkSession, sf_dir: str, threshold: float | No
         return jaccard_pairs(staged_shingles(spark, sf_dir), t)
 
     out = _ensure(f"jaccard_pairs_t{t}", sf_dir, build)
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 def staged_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -206,7 +200,7 @@ def staged_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: q_neardup_embedding(spark, sf_dir),
         table="embeddings",
     )
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 def staged_tfidf_topk(spark: SparkSession, sf_dir: str, k: int | None = None) -> DataFrame:
@@ -243,7 +237,7 @@ def staged_tfidf_topk(spark: SparkSession, sf_dir: str, k: int | None = None) ->
         )
 
     out = _ensure(f"tfidf_topk_k{kk}_p", sf_dir, build)
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 def staged_tfidf_sim_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -277,7 +271,7 @@ def staged_tfidf_sim_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         build,
     )
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 def staged_tfidf_doc_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -298,7 +292,7 @@ def staged_tfidf_doc_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         build,
     )
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 def staged_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -326,7 +320,7 @@ def staged_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         build,
     )
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 def staged_ann_method_topk(spark: SparkSession, sf_dir: str, method: str) -> DataFrame:
@@ -375,7 +369,7 @@ def staged_ann_method_topk(spark: SparkSession, sf_dir: str, method: str) -> Dat
         lambda: fn(spark, sf_dir),
         table="embeddings",
     )
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 def staged_ann_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -401,7 +395,7 @@ def staged_ann_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _ensure(
         f"ann_exact_topk_q{N_QUERIES}_k{TOP_K}", sf_dir, build, table="embeddings"
     )
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 def staged_video_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -448,4 +442,4 @@ def staged_video_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         build,
     )
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)

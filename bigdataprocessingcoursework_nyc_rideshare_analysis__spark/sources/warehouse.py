@@ -27,7 +27,7 @@ from urllib.parse import urlparse
 
 from pyspark.sql import SparkSession
 
-from .tables import load_table
+from .tables import file_listing, load_table
 from .sinks import write_bucketed_table
 
 #: (table, bucket key) — the two sides of the fact×fact edge
@@ -61,16 +61,13 @@ def _source_key(sf_dir: str, tables: tuple[str, ...]) -> str:
     regenerated testdata rebuilds and an unchanged source reuses."""
     parts = [f"wh1:{os.path.abspath(sf_dir)}"]
     for tbl in tables:
-        path = os.path.join(sf_dir, f"{tbl}.parquet")
-        if os.path.isdir(path):
-            for fname in sorted(os.listdir(path)):
-                st = os.stat(os.path.join(path, fname))
-                parts.append(f"{tbl}/{fname}:{st.st_size}:{st.st_mtime_ns}")
-        elif os.path.exists(path):
-            st = os.stat(path)
-            parts.append(f"{tbl}:{st.st_size}:{st.st_mtime_ns}")
-        else:
+        try:
+            listing = file_listing(os.path.join(sf_dir, f"{tbl}.parquet"))
+        except OSError:
             parts.append(f"{tbl}:absent")
+            continue
+        for fname, size, mtime in listing:
+            parts.append(f"{tbl}/{fname}:{size}:{mtime}" if fname else f"{tbl}:{size}:{mtime}")
     return hashlib.md5("|".join(parts).encode()).hexdigest()
 
 

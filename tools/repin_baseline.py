@@ -20,6 +20,7 @@ Usage: python tools/repin_baseline.py [round_label] [detail.json ...]
 from __future__ import annotations
 
 import json
+import os
 import statistics
 import sys
 from pathlib import Path
@@ -83,8 +84,11 @@ def main() -> None:
         "run_totals": [round(sum(d["queries"].values()), 2) for d in details],
         "noise_flagged": flagged,
     }
+    # bench.py's core count comes from the same variable, so the sweep
+    # and its repin must run under one environment
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     pins["comment"] = (
-        f"Per-query regression pins (seconds, sf{detail.get('sf')}, local[32], cold cache "
+        f"Per-query regression pins (seconds, sf{detail.get('sf')}, local[{cpus}], cold cache "
         f"per query, staging+warehouse built during warmup — their costs are "
         f"stage_build_sec / warehouse.build_sec, not query time).  perquery_sec recorded at "
         f"END of round {label[1:]} on shipped code ({detail.get('n_queries')} queries) under "
